@@ -1,0 +1,7 @@
+"""Make ``perfbench`` and the package importable from any working directory."""
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))))
